@@ -38,7 +38,7 @@ from knowledgegraphbuilder_spark.operators.multimodal import extract_features, f
 from knowledgegraphbuilder_spark.operators.pagerank import personalized_pagerank
 from knowledgegraphbuilder_spark.operators.relations import chunk_mention_join
 from knowledgegraphbuilder_spark.operators.retrieval import index_edges, retrieve_documents
-from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
 from knowledgegraphbuilder_spark.sources.interleaved import read_documents_parquet
 
 CFG = KGConfig()
@@ -1037,10 +1037,6 @@ def q_kg_incremental(spark, sf_dir):
     import hashlib
     import shutil
 
-    from knowledgegraphbuilder_spark.operators.chunk import chunk_documents
-    from knowledgegraphbuilder_spark.operators.flatten import flatten_documents
-    from knowledgegraphbuilder_spark.operators.ner import extract_mentions
-    from knowledgegraphbuilder_spark.operators.relations import extract_relations
     from knowledgegraphbuilder_spark.sources.sinks import merge_upsert
 
     spans = _spans_cached(spark, sf_dir)
@@ -1052,16 +1048,8 @@ def q_kg_incremental(spark, sf_dir):
     ).first()[0]
 
     def fold(part):
-        docs = flatten_documents(part)
-        mentions = extract_mentions(
-            chunk_documents(docs, CFG.ner_chunk_size, CFG.ner_chunk_overlap),
-            CFG,
-        )
-        rels = extract_relations(
-            chunk_documents(docs, CFG.re_chunk_size, CFG.re_chunk_overlap),
-            mentions, CFG,
-        )
-        merge_upsert(spark, f"{base}/out", rels, "relation_id")
+        merge_upsert(spark, f"{base}/out", run_pipeline(part, CFG).relations,
+                     "relation_id")
 
     half = (n + 1) // 2
     lo = spans.filter(

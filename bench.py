@@ -85,7 +85,7 @@ def run_kg_once(parallelism: int, sf_dir: str, amplify: int = 1,
     from pyspark.sql import functions as F
 
     from knowledgegraphbuilder_spark.config import KGConfig
-    from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+    from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
     from knowledgegraphbuilder_spark.session import build_session
     from knowledgegraphbuilder_spark.sources.interleaved import synthesize_spans
 
@@ -326,7 +326,7 @@ def main() -> None:
     # e2e KG pipeline timing FIRST, in the cleanest warm state (fresh plan,
     # warmed JVM, nothing pinned): min-of-2, same outlier logic as the loop
     from knowledgegraphbuilder_spark.config import KGConfig
-    from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+    from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
     from knowledgegraphbuilder_spark.sources.interleaved import read_documents_parquet
 
     spans = read_documents_parquet(spark, SF_DIR)

@@ -173,7 +173,8 @@ def k_core(
     is what lets the SQL oracle replay a fixed unroll.
 
     Lineage is truncated with an eager localCheckpoint per round (the
-    nondeterministic-recompute trap documented in plans/pipeline.py).
+    nondeterministic-recompute trap documented in run_pipeline,
+    plans/checkpoint.py).
     Output: (node, core_degree) for k-core members — core_degree is the
     degree WITHIN the core subgraph (>= k by construction)."""
     e = (
@@ -232,7 +233,8 @@ def bfs_hops(
     the frontier's edge boundary (the textbook Pregel/BSP BFS shape; on a
     real cluster each round is one shuffle on the node key). Lineage is
     truncated per round with an eager localCheckpoint (the
-    nondeterministic-recompute trap documented in plans/pipeline.py).
+    nondeterministic-recompute trap documented in run_pipeline,
+    plans/checkpoint.py).
 
     Output: (node, hop) — hop is the EXACT shortest distance for every node
     within ``max_hops`` of a seed (frontier-at-round-h nodes are found at

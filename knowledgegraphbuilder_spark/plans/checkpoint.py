@@ -1,12 +1,21 @@
-"""Checkpointed, resumable pipeline runner with per-partition lineage.
+"""The KG-construction stage graph, declared once and run two ways: the
+Spark-native analog of ``KnowledgeGraphGenerator.generate``
+(back/kgg/generator.py:30-74).
 
-The Spark-native generalization of the reference's whole-graph JSON cache
-(back/kgg/generator.py:42-53,76-122): instead of one opaque cache file, every
-stage writes a parquet checkpoint table (stands in for an Iceberg table in
-the sandbox — same createOrReplace semantics, minus snapshot isolation) plus
-per-partition lineage rows. A stage whose checkpoint exists is skipped on
-resume; because every id is content-hashed (functions/ids.py), a resumed run
-produces byte-identical triples — uuid4 (reference) could not.
+Stage graph (SURVEY.md §7.2): spans -> flatten -> chunk -> mentions ->
+relations -> nodes -> edges -> triples/provenance. ``STAGES`` lists it in
+execution order; every stage is a pure DataFrame -> DataFrame function.
+
+- ``run_pipeline`` executes the table in memory: fully lazy (one Catalyst
+  plan) or with the fan-out stages pinned by eager ``localCheckpoint``.
+- ``CheckpointedPipeline`` executes it durably, the generalization of the
+  reference's whole-graph JSON cache (back/kgg/generator.py:42-53,76-122):
+  instead of one opaque cache file, every stage writes a parquet checkpoint
+  table (stands in for an Iceberg table in the sandbox — same
+  createOrReplace semantics, minus snapshot isolation) plus per-partition
+  lineage rows. A stage whose checkpoint exists is skipped on resume;
+  because every id is content-hashed (functions/ids.py), a resumed run
+  produces byte-identical triples — uuid4 (reference) could not.
 
 Lineage rows: (run_id, stage, partition_id, n_rows, wall_s, ts) — wall_s is
 stage wall clock (per-partition timing would need accumulators; row counts
@@ -15,9 +24,12 @@ are per physical partition).
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 import uuid
+from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +48,118 @@ from knowledgegraphbuilder_spark.operators.graph_build import (
 )
 from knowledgegraphbuilder_spark.operators.ner import extract_mentions
 from knowledgegraphbuilder_spark.operators.relations import extract_relations
-from knowledgegraphbuilder_spark.plans.pipeline import KGResult
+
+
+@dataclass
+class KGResult:
+    documents: DataFrame  # flattened (doc_id, text, media_refs, spans)
+    mentions: DataFrame
+    relations: DataFrame
+    nodes: DataFrame
+    membership: DataFrame
+    edges: DataFrame
+    triples: DataFrame
+    provenance: DataFrame
+
+
+class _Build(NamedTuple):
+    """What every stage may read besides its input tables."""
+
+    cfg: KGConfig
+    ner_backend: object | None
+    re_backend: object | None
+
+
+# (name, inputs, make): make(build, *input tables) -> DataFrame. "spans" is
+# the pipeline input. The lambdas resolve the operators through this
+# module's globals at call time, so patching a name here reroutes both
+# runners. Normalized membership is the at-scale node representation; the
+# member-ID arrays (reference ``Node.entities`` parity shape) would put every
+# mention id of a head surface form into ONE row — multi-GB at 10^12
+# mentions — so the pipeline never materializes them (parity tests opt in
+# explicitly via with_member_arrays=True).
+STAGES = (
+    ("s1_documents", ("spans",), lambda b, spans: flatten_documents(spans)),
+    ("s2_ner_chunks", ("s1_documents",),
+     lambda b, docs: chunk_documents(docs, b.cfg.ner_chunk_size, b.cfg.ner_chunk_overlap)),
+    ("s4_mentions", ("s2_ner_chunks",),
+     lambda b, chunks: extract_mentions(chunks, b.cfg, backend=b.ner_backend)),
+    ("s2_re_chunks", ("s1_documents",),
+     lambda b, docs: chunk_documents(docs, b.cfg.re_chunk_size, b.cfg.re_chunk_overlap)),
+    ("s5_relations", ("s2_re_chunks", "s4_mentions"),
+     lambda b, chunks, mentions: extract_relations(
+         chunks, mentions, b.cfg, backend=b.re_backend)),
+    ("s7_nodes", ("s4_mentions",),
+     lambda b, mentions: cluster_mentions_exact(mentions, b.cfg, with_member_arrays=False)),
+    ("s7_membership", ("s4_mentions",), lambda b, mentions: node_membership(mentions)),
+    ("s8_edges", ("s5_relations", "s7_nodes"),
+     lambda b, relations, nodes: build_edges(relations, nodes, b.cfg.default_edge_weight)),
+    ("s9_triples", ("s8_edges", "s7_nodes"), lambda b, edges, nodes: build_triples(edges, nodes)),
+    ("s9_provenance", ("s5_relations",), lambda b, relations: build_provenance(relations)),
+)
+
+_RESULT_STAGES = {
+    "documents": "s1_documents", "mentions": "s4_mentions",
+    "relations": "s5_relations", "nodes": "s7_nodes",
+    "membership": "s7_membership", "edges": "s8_edges",
+    "triples": "s9_triples", "provenance": "s9_provenance",
+}
+
+# fan-out points: mentions feeds the relation join, the resolution
+# dictionary, clustering and membership; relations and nodes each feed two
+# graph tables
+_PINNED = ("s4_mentions", "s5_relations", "s7_nodes")
+
+
+def _execute(spans_df: DataFrame, build: _Build, stage) -> KGResult:
+    """Run ``STAGES`` in order; ``stage(name, make)`` turns each stage's
+    zero-argument ``make`` into the DataFrame its consumers read."""
+    tables = {"spans": spans_df}
+    for name, inputs, make in STAGES:
+        tables[name] = stage(name, functools.partial(make, build, *(tables[i] for i in inputs)))
+    return KGResult(**{field: tables[name] for field, name in _RESULT_STAGES.items()})
+
+
+def _dependents(stages) -> set[str]:
+    """``stages`` plus every stage that reads one of them, transitively."""
+    out = set(stages)
+    for name, inputs, _ in STAGES:  # STAGES is in dependency order
+        if out.intersection(inputs):
+            out.add(name)
+    return out
+
+
+def run_pipeline(
+    spans_df: DataFrame,
+    config: KGConfig | None = None,
+    ner_backend: object | None = None,
+    re_backend: object | None = None,
+    materialize: str = "none",
+) -> KGResult:
+    """In-memory run of ``STAGES``. ``materialize`` pins the fan-out stages:
+
+    - ``"none"`` (default): fully lazy — right for one-shot small queries.
+    - ``"ckpt"``: EAGER ``localCheckpoint`` of each fan-out stage — computes
+      every inference UDF stage exactly once and truncates lineage; the fast
+      choice for bulk runs (measured: persist's InMemoryRelation barriers
+      serialize the job into waves and cost ~2x at high core counts).
+      Eagerness matters: with lazy checkpoints, one action over the whole
+      graph can schedule the fan-out consumers as CONCURRENT stages, each
+      recomputing the full pre-checkpoint inference lineage before the
+      checkpoint materializes — measured 1.8-2.3x total CPU, nondeterministic
+      (it needs spare task slots, so it inflated only the wide scaling leg).
+
+    At cluster scale prefer ``CheckpointedPipeline`` (durable + resumable)."""
+    if materialize not in ("none", "ckpt"):
+        raise ValueError(f"materialize must be 'none' or 'ckpt', got {materialize!r}")
+
+    def stage(name, make):
+        df = make()
+        if materialize == "ckpt" and name in _PINNED:
+            df = df.localCheckpoint(eager=True)
+        return df
+
+    return _execute(spans_df, _Build(config or KGConfig(), ner_backend, re_backend), stage)
 
 
 class CheckpointedPipeline:
@@ -62,10 +185,10 @@ class CheckpointedPipeline:
         return f"{self.work_dir}/{stage}"
 
     def _hadoop_path(self, path: str):
-        """Resolve through the Hadoop FileSystem API so checkpoint probing and
-        invalidation work on any scheme the cluster writes to (file://, hdfs://,
-        s3a://) — a local os.path probe would silently re-run every stage when
-        work_dir is an object store."""
+        """Resolve through the Hadoop FileSystem API so checkpoint probing,
+        invalidation and the run manifest work on any scheme the cluster
+        writes to (file://, hdfs://, s3a://) — a local os.path probe would
+        silently re-run every stage when work_dir is an object store."""
         jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, jpath
@@ -101,8 +224,19 @@ class CheckpointedPipeline:
         )
         return df
 
+    def _write_manifest(self) -> None:
+        fs, jpath = self._hadoop_path(f"{self.work_dir}/_run_{self.run_id}.json")
+        out = fs.create(jpath, True)
+        try:
+            out.write(bytearray(json.dumps(self.stage_log).encode()))
+        finally:
+            out.close()
+
     def invalidate(self, *stages: str) -> None:
-        for s in stages:
+        """Delete the named stages' checkpoints and those of every stage
+        downstream of them, so the next run cannot resume a table built from
+        the old inputs."""
+        for s in _dependents(stages):
             fs, jpath = self._hadoop_path(self._path(s))
             if fs.exists(jpath):
                 fs.delete(jpath, True)
@@ -113,48 +247,7 @@ class CheckpointedPipeline:
     # -- the pipeline --------------------------------------------------------
 
     def run(self, spans_df: DataFrame, force: bool = False) -> KGResult:
-        cfg = self.cfg
-        docs = self._stage("s1_documents", lambda: flatten_documents(spans_df), force)
-        ner_chunks = self._stage(
-            "s2_ner_chunks",
-            lambda: chunk_documents(docs, cfg.ner_chunk_size, cfg.ner_chunk_overlap),
-            force,
-        )
-        mentions = self._stage(
-            "s4_mentions",
-            lambda: extract_mentions(ner_chunks, cfg, backend=self.ner_backend),
-            force,
-        )
-        re_chunks = self._stage(
-            "s2_re_chunks",
-            lambda: chunk_documents(docs, cfg.re_chunk_size, cfg.re_chunk_overlap),
-            force,
-        )
-        relations = self._stage(
-            "s5_relations",
-            lambda: extract_relations(re_chunks, mentions, cfg, backend=self.re_backend),
-            force,
-        )
-        nodes = self._stage(
-            "s7_nodes",
-            lambda: cluster_mentions_exact(mentions, cfg, with_member_arrays=False),
-            force,
-        )
-        membership = self._stage("s7_membership", lambda: node_membership(mentions), force)
-        edges = self._stage(
-            "s8_edges", lambda: build_edges(relations, nodes, cfg.default_edge_weight), force
-        )
-        triples = self._stage("s9_triples", lambda: build_triples(edges, nodes), force)
-        provenance = self._stage("s9_provenance", lambda: build_provenance(relations), force)
-        with open(f"{self.work_dir}/_run_{self.run_id}.json", "w") as f:
-            json.dump(self.stage_log, f)
-        return KGResult(
-            documents=docs,
-            mentions=mentions,
-            relations=relations,
-            nodes=nodes,
-            membership=membership,
-            edges=edges,
-            triples=triples,
-            provenance=provenance,
-        )
+        build = _Build(self.cfg, self.ner_backend, self.re_backend)
+        res = _execute(spans_df, build, lambda name, make: self._stage(name, make, force))
+        self._write_manifest()
+        return res

@@ -3,7 +3,7 @@
 from knowledgegraphbuilder_spark.config import KGConfig
 from knowledgegraphbuilder_spark.operators.answer import answer_question, format_context
 from knowledgegraphbuilder_spark.operators.retrieval import index_edges, retrieve_documents
-from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
 
 
 def test_answer_question_end_to_end(spark, corpus_df):

@@ -18,7 +18,7 @@ from knowledgegraphbuilder_spark.operators.retrieval import (
     retrieve_documents,
     retrieve_documents_batch,
 )
-from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
 
 QUERIES = [
     ("q0", "which customer stream uses spark"),

@@ -2,6 +2,8 @@
 mid-pipeline stage recomputes downstream to byte-identical triples
 (BASELINE.json north rule)."""
 
+import json
+
 from knowledgegraphbuilder_spark.config import KGConfig
 from knowledgegraphbuilder_spark.plans.checkpoint import CheckpointedPipeline
 
@@ -47,6 +49,36 @@ def test_lineage_rows(spark, corpus_df, tmp_path_factory):
         by_stage[r["stage"]] = by_stage.get(r["stage"], 0) + r["n_rows"]
     assert by_stage["s9_triples"] == res.triples.count()
     assert all(r["wall_s"] >= 0 for r in lin)
+
+
+def test_invalidate_recomputes_every_dependent(spark, corpus_df, tmp_path_factory):
+    """Invalidating one stage also drops everything built from it: nothing
+    downstream of s4_mentions may resume from the old mentions."""
+    wd = str(tmp_path_factory.mktemp("ckpt_inval"))
+    t1 = _triples(CheckpointedPipeline(spark, wd, KGConfig()).run(corpus_df))
+
+    p = CheckpointedPipeline(spark, wd, KGConfig())
+    p.invalidate("s4_mentions")
+    r = p.run(corpus_df)
+    flags = {s["stage"]: s["resumed"] for s in p.stage_log}
+    resumed = {"s1_documents", "s2_ner_chunks", "s2_re_chunks"}
+    assert {s for s, f in flags.items() if f} == resumed
+    assert set(flags) - resumed == {
+        "s4_mentions", "s5_relations", "s7_nodes", "s7_membership",
+        "s8_edges", "s9_triples", "s9_provenance",
+    }
+    assert _triples(r) == t1
+
+
+def test_manifest_on_file_uri_work_dir(spark, corpus_df, tmp_path_factory):
+    """A file:// work_dir goes through the Hadoop FileSystem API end to end,
+    the run manifest included."""
+    wd = tmp_path_factory.mktemp("ckpt_uri")
+    p = CheckpointedPipeline(spark, wd.as_uri(), KGConfig())
+    p.run(corpus_df)
+    assert len(p.stage_log) == 10
+    manifest = wd / f"_run_{p.run_id}.json"
+    assert json.loads(manifest.read_text()) == p.stage_log
 
 
 def test_vacuum_snapshots_keeps_fallback_versions(spark, tmp_path):

@@ -177,7 +177,7 @@ class TestKgPipelineDegenerate:
         empty, null, whitespace-only, or single-token — and still extract
         from the one well-formed doc."""
         from knowledgegraphbuilder_spark.config import KGConfig
-        from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+        from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
         from knowledgegraphbuilder_spark.sources.interleaved import synthesize_spans
 
         docs = spark.createDataFrame(
@@ -195,7 +195,7 @@ class TestKgPipelineDegenerate:
 
     def test_empty_corpus_yields_empty_graph(self, spark):
         from knowledgegraphbuilder_spark.config import KGConfig
-        from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+        from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
         from knowledgegraphbuilder_spark.sources.interleaved import synthesize_spans
 
         docs = spark.createDataFrame([], "doc_id long, text string")

@@ -16,7 +16,7 @@ from knowledgegraphbuilder_spark.operators.retrieval import (
     index_edges,
     retrieve_documents,
 )
-from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
 from knowledgegraphbuilder_spark.sources.interleaved import read_documents_parquet
 from knowledgegraphbuilder_spark.sources.sinks import (
     clear_graph,

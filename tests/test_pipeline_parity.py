@@ -5,11 +5,18 @@ expected with deterministic backends) — same P/R-vs-golden math as the
 reference's own chunking harness (back/kgg/test/test3.py:228-249).
 """
 
+import dataclasses
+
 import pytest
 
 from knowledgegraphbuilder_spark.config import KGConfig
 from knowledgegraphbuilder_spark.operators.chunk import chunk_documents, chunk_words
-from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+from knowledgegraphbuilder_spark.operators.relations import TemplateRelationBackend
+from knowledgegraphbuilder_spark.plans.checkpoint import (
+    CheckpointedPipeline,
+    KGResult,
+    run_pipeline,
+)
 
 from tests import oracle_serial as oracle
 
@@ -118,3 +125,53 @@ def test_driver_corpus_parity(spark, sf_dir):
     g = oracle.run_oracle(docs)
     p, r = oracle.precision_recall(got, g["triples"])
     assert p == 1.0 and r == 1.0, (p, r)
+
+
+def _rows(df, drop=()):
+    return sorted(map(repr, df.drop(*drop).collect()))
+
+
+def test_runners_agree(spark, corpus_df, result, tmp_path_factory):
+    """Lazy, eagerly pinned and durable runs of the one stage table return
+    the same rows in every result table (provenance's partition_id records
+    physical layout, so it is left out)."""
+    wd = str(tmp_path_factory.mktemp("parity_ckpt"))
+    others = [
+        run_pipeline(corpus_df, KGConfig(), materialize="ckpt"),
+        CheckpointedPipeline(spark, wd, KGConfig()).run(corpus_df),
+    ]
+    for field in dataclasses.fields(KGResult):
+        drop = ("partition_id",) if field.name == "provenance" else ()
+        want = _rows(getattr(result, field.name), drop)
+        assert want, field.name
+        for res in others:
+            assert _rows(getattr(res, field.name), drop) == want, field.name
+
+
+def test_ckpt_runs_re_backend_once(spark, corpus_df):
+    """Under materialize="ckpt" the eager pin of s5_relations is the only
+    job that calls the RE backend; reading the relation-derived tables
+    afterwards must not call it again."""
+
+    class CountingRE:  # a local class is pickled by value to the workers
+        def __init__(self, calls):
+            self.calls = calls
+            self.inner = TemplateRelationBackend()
+
+        def generate_batch(self, chunk_texts, entity_blocks, ents):
+            self.calls.add(len(chunk_texts))
+            return self.inner.generate_batch(chunk_texts, entity_blocks, ents)
+
+    calls = spark.sparkContext.accumulator(0)
+    res = run_pipeline(corpus_df, KGConfig(), re_backend=CountingRE(calls),
+                       materialize="ckpt")
+    n = calls.value
+    assert n > 0
+    for df in (res.triples, res.edges, res.provenance, res.relations):
+        df.collect()
+    assert calls.value == n
+
+
+def test_materialize_rejects_unknown_value(corpus_df):
+    with pytest.raises(ValueError, match="'none' or 'ckpt'"):
+        run_pipeline(corpus_df, KGConfig(), materialize="chkpt")

@@ -3,7 +3,7 @@
 import os
 
 from knowledgegraphbuilder_spark.config import KGConfig
-from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
 from knowledgegraphbuilder_spark.streaming.ingest import (
     run_ingest_available_now,
     run_relations_available_now,

@@ -55,7 +55,7 @@ def main() -> None:
     # localCheckpoints fan-out points, which would hide everything upstream
     # behind `Scan ExistingRDD` and gut the evidence
     from knowledgegraphbuilder_spark.operators.canonicalize import cluster_mentions_exact
-    from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+    from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
     from knowledgegraphbuilder_spark.sources.interleaved import read_documents_parquet
 
     kg = run_pipeline(read_documents_parquet(spark, args.sf), entry.CFG)

@@ -75,7 +75,7 @@ def main() -> None:
     from knowledgegraphbuilder_spark.operators.retrieval import (
         index_edges, retrieve_documents, retrieve_documents_batch,
     )
-    from knowledgegraphbuilder_spark.plans.pipeline import run_pipeline
+    from knowledgegraphbuilder_spark.plans.checkpoint import run_pipeline
     from knowledgegraphbuilder_spark.session import build_session
     from knowledgegraphbuilder_spark.sources.interleaved import (
         read_documents_parquet,
